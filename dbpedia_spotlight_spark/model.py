@@ -22,7 +22,6 @@ hot path):
 
 from __future__ import annotations
 
-import bisect
 import math
 from dataclasses import dataclass, field
 
@@ -299,51 +298,49 @@ def load_model(spark, lexicon_dir: str,
     )
 
 
-def context_loglik(
-    model: SpotlightModel,
-    entity_ids: np.ndarray,
-    q_tokens: np.ndarray,
-    q_counts: np.ndarray,
-    smooth: np.ndarray | None = None,
-) -> np.ndarray:
-    """Generative context similarity (SURVEY §2.5 D2, Daiber 2013):
+def _ctx_counts(model: SpotlightModel, entity_ids: np.ndarray,
+                q_tokens: np.ndarray) -> np.ndarray:
+    """The context-gather kernel both similarities share: the
+    candidates × query-bag matrix of raw context counts c(t,e).
 
-    log P(q|e) = Σ_t n(t,q) · log( λ·c(t,e)/C(e) + (1−λ)·P_LM(t) )
-
-    Vectorized per candidate via searchsorted gather on the entity's CSR
-    row (token-ascending). q_tokens must be sorted ascending. ``smooth``
-    = (1−λ)·P_LM(q_tokens): pass it precomputed when scoring many
-    mentions against the same context bag (the Zipf-common case — it is
-    an exp() over the bag per call otherwise).
-    """
-    lam = model.lam
-    if smooth is None:
-        smooth = (1.0 - lam) * np.exp(model.lm_logprob[q_tokens])
-    n_e, n_q = len(entity_ids), len(q_tokens)
-    if n_e == 0:
-        return np.empty(0, dtype=np.float64)
-    if n_q == 0:
-        return np.zeros(n_e, dtype=np.float64)
-    # one flat gather over ALL candidates' CSR rows + ONE searchsorted of
-    # the concatenated row tokens into the (sorted) query bag — the former
-    # per-entity loop paid a python iteration + small-array searchsorted
-    # per candidate (~25% of the flagship hot loop at profile)
+    ONE flat gather over ALL candidates' CSR rows + ONE searchsorted of
+    the concatenated row tokens into the (sorted) query bag — no python
+    iteration and no small-array searchsorted per candidate."""
     eids = np.asarray(entity_ids, dtype=np.int64)
     los = model.ctx_indptr[eids]
     lens = model.ctx_indptr[eids + 1] - los
     total = int(lens.sum())
-    c_mat = np.zeros((n_e, n_q), dtype=np.float64)
-    if total:
+    n_q = len(q_tokens)
+    c_mat = np.zeros((len(eids), n_q), dtype=np.float64)
+    if total and n_q:
         offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
         flat = (np.arange(total, dtype=np.int64)
                 - np.repeat(offs, lens) + np.repeat(los, lens))
-        row_of = np.repeat(np.arange(n_e, dtype=np.int64), lens)
+        row_of = np.repeat(np.arange(len(eids), dtype=np.int64), lens)
         row_tok = model.ctx_token[flat]
         pos = np.searchsorted(q_tokens, row_tok)
         clip = np.minimum(pos, n_q - 1)
         hit = q_tokens[clip] == row_tok
         c_mat[row_of[hit], clip[hit]] = model.ctx_count[flat][hit]
-    p = (lam * c_mat / np.maximum(model.ctx_total[eids], 1e-300)[:, None]
+    return c_mat
+
+
+def context_loglik(
+    model: SpotlightModel,
+    entity_ids: np.ndarray,
+    q_tokens: np.ndarray,
+    q_counts: np.ndarray,
+) -> np.ndarray:
+    """Generative context similarity (SURVEY §2.5 D2, Daiber 2013):
+
+    log P(q|e) = Σ_t n(t,q) · log( λ·c(t,e)/C(e) + (1−λ)·P_LM(t) )
+
+    for every candidate in ``entity_ids`` at once (``_ctx_counts``
+    gather). q_tokens must be sorted ascending."""
+    lam = model.lam
+    smooth = (1.0 - lam) * np.exp(model.lm_logprob[q_tokens])
+    p = (lam * _ctx_counts(model, entity_ids, q_tokens)
+         / np.maximum(model.ctx_total[entity_ids], 1e-300)[:, None]
          + smooth[None, :])
     return np.log(np.maximum(p, 1e-300)) @ q_counts
 
@@ -356,27 +353,21 @@ def tficf_scores(
 ) -> list[np.ndarray]:
     """TF-ICF similarity (SURVEY §2.5 D3, Mendes 2011):
 
-    score(e) = Σ_t tf(t,q)·tf(t,e)·icf(t),
+    score(e) = Σ_t tf(t,q)·tf(t,e)·icf(t),   tf(t,e) = c(t,e)/C(e),
     icf(t) = log(|cands| / |{e ∈ cands : c(t,e)>0}|)
 
-    computed per disambiguation instance over *its* candidate set.
+    computed per disambiguation instance over *its* candidate set; all
+    groups share ONE ``_ctx_counts`` gather (q_tokens sorted ascending).
     """
+    sizes = [len(g) for g in groups]
+    eids = np.concatenate(groups)
+    tf_all = (_ctx_counts(model, eids, q_tokens)
+              / np.maximum(model.ctx_total[eids], 1e-300)[:, None])
     out = []
-    for ents in groups:
-        n = len(ents)
-        if n == 0:
-            out.append(np.zeros(0))
-            continue
-        tf_mat = np.zeros((n, len(q_tokens)))
-        for i, eid in enumerate(ents):
-            lo, hi = model.ctx_indptr[eid], model.ctx_indptr[eid + 1]
-            row_tok = model.ctx_token[lo:hi]
-            if len(row_tok) == 0:
-                continue
-            pos = np.searchsorted(row_tok, q_tokens)
-            pos_c = np.minimum(pos, len(row_tok) - 1)
-            hit = (pos < len(row_tok)) & (row_tok[pos_c] == q_tokens)
-            tf_mat[i, hit] = model.ctx_count[lo:hi][pos_c[hit]] / max(model.ctx_total[eid], 1e-300)
+    off = 0
+    for n in sizes:
+        tf_mat = tf_all[off:off + n]
+        off += n
         df = (tf_mat > 0).sum(axis=0)
         icf = np.where(df > 0, np.log(n / np.maximum(df, 1)), 0.0)
         out.append(tf_mat @ (q_counts * icf))

@@ -23,6 +23,15 @@ candidate top-K pruning before scoring (north_star: "candidate-list
 pruning before the disambiguation shuffle" — here the shuffle is removed
 entirely, which is strictly better).
 
+There is one path through the UDF. ``_map_docs`` is the one
+mapInPandas pass of all four endpoints (annotate, candidates, spot,
+nil_spots); ``_doc_spots`` tokenizes, spots and builds the
+per-paragraph context bags; ``_score_doc`` scores every disambiguator (prior, generative,
+tficf) the same way — ln P(e|s) plus one batched context call per
+paragraph over the shared ``model._ctx_counts`` gather — and
+``_rank_scores`` ranks. ``sources.spotxml.disambiguate_xml`` feeds
+externally supplied spots into the same bag and scoring code.
+
 A relational path (explode → broadcast join → window) is kept for
 transparency and as the oracle cross-check (§3.1's DAG); tests assert the
 two paths agree row-for-row.
@@ -59,7 +68,6 @@ class PipelineConfig:
     disambiguator: str = "generative"  # 'prior' (D8) | 'generative' (D2) | 'tficf' (D3)
     spotter: str = "fsa"             # P1 'fsa' | P3 'npchunk' (chunk-exact)
     k: int = 1                       # D6 bestK
-    max_candidates: int = 20         # C2 pruning before scoring
     lang: str | None = "en"
     coreference: bool = False        # F5
 
@@ -73,6 +81,9 @@ class PipelineConfig:
                 "chunk-exact precision spotter P3; wiki-markup input goes "
                 "through sources.wikimarkup)")
 
+
+# C2: candidates kept (top-K by prior; rows are prior-desc) for scoring
+_MAX_CANDIDATES = 20
 
 ANNOTATION_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -139,39 +150,27 @@ def _bag(counts: dict[int, int]) -> tuple[np.ndarray, np.ndarray]:
     return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
 
 
-def _doc_spots(model: SpotlightModel, text: str, spotter: str = "fsa"):
-    """Tokenize (T1/T5) + spot (P1 FSA / P3 chunk-exact) + gate (P2) +
-    overlap resolve (P4) + per-paragraph context bags (D1 step 1 — the
-    reference's two-step disambiguator builds ONE context query per
-    *paragraph*, db/DBTwoStepDisambiguator.scala [U]; paragraphs are the
-    '\\n'-separated lines of the extracted text).
+def _para_bags(model: SpotlightModel, text: str, toks):
+    """ONE pass over ``toks`` (``tokenize(text)``) builds both the
+    token-id stream (automaton input, -1 = out of vocabulary) and the
+    per-paragraph context bags (D1 step 1 — the reference's two-step
+    disambiguator builds ONE context query per *paragraph*,
+    db/DBTwoStepDisambiguator.scala [U]; paragraphs are the
+    '\\n'-separated lines of the text; stopwords are left out).
 
-    ``spotter='npchunk'`` (P3, OpenNLPChunkerSpotter semantics [U]): a
-    chunk is a maximal stopword-free token run (the model-free shallow
-    NP heuristic — no OpenNLP models in this stack); a spot is emitted
-    only when the ENTIRE chunk is a lexicon surface form — the
-    precision-oriented spotter (e.g. 'big table scan' yields no spot
-    even though 'table scan' is an sf). Chunk-exact matches cannot
-    overlap, so P4 resolution is a no-op on this path.
-
-    Returns (spots, bags): spots = [(begin, end, sf_id, para_idx)] in char
-    coords of ``text``; bags[para_idx] = (q_tokens sorted, q_counts)."""
-    toks = tokenize(text)
+    Returns (ids, bounds, bags): bounds = char offset of each '\\n'
+    (``_para_of`` maps a char offset to its paragraph); bags[para_idx]
+    = (q_tokens sorted, q_counts)."""
     lookup = _token_lookup(model)
-
-    # paragraph boundaries: char offset of each '\n' in the text
     bounds: list[int] = []
     pos = text.find("\n")
     while pos != -1:
         bounds.append(pos)
         pos = text.find("\n", pos + 1)
 
-    # ONE pass over the tokens builds both the id stream (automaton
-    # input) and the per-paragraph context bags: tokens arrive in char
-    # order, so the paragraph index advances with a monotone pointer —
-    # no per-token bisect, no second zip pass
-    n_paras = len(bounds) + 1
-    counts: list[dict[int, int]] = [dict() for _ in range(n_paras)]
+    # tokens arrive in char order, so the paragraph index advances with
+    # a monotone pointer — no per-token bisect, no second zip pass
+    counts: list[dict[int, int]] = [dict() for _ in range(len(bounds) + 1)]
     stop = model.stopwords
     ids: list[int] = []
     ap_ids = ids.append
@@ -186,6 +185,29 @@ def _doc_spots(model: SpotlightModel, text: str, spotter: str = "fsa"):
                     bi += 1
                 cur = counts[bi]
             cur[tid] = cur.get(tid, 0) + 1
+    return ids, bounds, [_bag(c) for c in counts]
+
+
+def _para_of(bounds: list[int], char_begin: int) -> int:
+    return bisect.bisect_right(bounds, char_begin) if bounds else 0
+
+
+def _doc_spots(model: SpotlightModel, text: str, spotter: str = "fsa"):
+    """Tokenize (T1/T5) + spot (P1 FSA / P3 chunk-exact) + gate (P2) +
+    overlap resolve (P4) + per-paragraph context bags (``_para_bags``).
+
+    ``spotter='npchunk'`` (P3, OpenNLPChunkerSpotter semantics [U]): a
+    chunk is a maximal stopword-free token run (the model-free shallow
+    NP heuristic — no OpenNLP models in this stack); a spot is emitted
+    only when the ENTIRE chunk is a lexicon surface form — the
+    precision-oriented spotter (e.g. 'big table scan' yields no spot
+    even though 'table scan' is an sf). Chunk-exact matches cannot
+    overlap, so P4 resolution is a no-op on this path.
+
+    Returns (spots, bags): spots = [(begin, end, sf_id, para_idx)] in char
+    coords of ``text``; bags[para_idx] = (q_tokens sorted, q_counts)."""
+    toks = tokenize(text)
+    ids, bounds, bags = _para_bags(model, text, toks)
     matches = model.automaton.find_all(ids)
     if spotter == "npchunk":
         # chunk span per token index: runs delimited by stopwords
@@ -207,153 +229,91 @@ def _doc_spots(model: SpotlightModel, text: str, spotter: str = "fsa"):
     # spot gate BEFORE overlap resolution: below-gate spots must not block
     # legitimate overlapping spots (DBSpotter threshold gating [U])
     gated = [m for m in matches if model.sf_ann_prob[m[2]] >= model.spot_threshold]
-    kept = resolve_overlaps(gated)
-
-    if bounds:
-        def para_of(char_begin: int) -> int:
-            return bisect.bisect_right(bounds, char_begin)
-    else:
-        # single-paragraph fast path: skip the per-token bisect entirely
-        def para_of(char_begin: int) -> int:
-            return 0
-
     spots = [
-        (toks[s][0], toks[e - 1][1], sf_id, para_of(toks[s][0]))
-        for (s, e, sf_id) in kept
+        (toks[s][0], toks[e - 1][1], sf_id, _para_of(bounds, toks[s][0]))
+        for (s, e, sf_id) in resolve_overlaps(gated)
     ]
-
-    # bags built in the single token pass above (two-step step 1)
-    bags = [_bag(c) for c in counts]
     return spots, bags
 
 
 def _score_doc(model: SpotlightModel, cfg: PipelineConfig, spots, bags):
     """Disambiguate all spots of one document (D1–D7), each against its
-    paragraph's context bag. Yields rows
-    (begin, end, sf_id, entity_id, rank, similarity, pct_second).
+    paragraph's context bag — the one scorer of every disambiguator.
+    Returns rows (begin, end, sf_id, entity_id, rank, similarity,
+    pct_second).
 
-    Scores depend only on (paragraph, surface form) — repeated mentions
-    of the same sf in a paragraph (Zipf-frequent in real corpora) are
-    scored ONCE per doc via a memo. On the generative path, all of a
-    paragraph's multi-candidate scorings run as ONE batched
-    context_loglik call (per-entity math is unchanged — the function
-    iterates entities — so results are bit-identical; the win is numpy
-    small-array call overhead, ~25% of the hot loop)."""
-    out = []
+    score(e) = ln P(e|s) + context(e), where context is
+    ``context_loglik`` (generative, D2), ``tficf_scores`` (tficf, D3) or
+    nothing (prior, D8). Scores depend only on (paragraph, surface form),
+    so repeated mentions of an sf in a paragraph (Zipf-frequent) are
+    scored ONCE via a memo. NIL surface forms (C3) emit nothing and
+    singletons rank 1 with similarity 1.0 unscored (context cannot move
+    a softmax over one score); the rest are C2-pruned to their
+    ``_MAX_CANDIDATES`` best priors and each paragraph's candidate groups
+    go through ONE context call, then ``_rank_scores``."""
+    indptr, cand_entity = model.cand_indptr, model.cand_entity
     memo: dict[tuple[int, int], list] = {}
+    pending: dict[int, list[int]] = {}
+    for (_b, _e, sf_id, para_idx) in spots:
+        key = (para_idx, sf_id)
+        if key in memo:
+            continue
+        lo, hi = indptr[sf_id], indptr[sf_id + 1]
+        if hi <= lo:
+            memo[key] = []
+        elif hi - lo == 1:
+            memo[key] = [(int(cand_entity[lo]), 1, 1.0, 0.0)]
+        else:
+            memo[key] = None
+            pending.setdefault(para_idx, []).append(sf_id)
+    for para_idx, sf_list in pending.items():
+        q_tokens, q_counts = bags[para_idx]
+        spans = []
+        parts = []
+        off = 0
+        for sf_id in sf_list:
+            lo = int(indptr[sf_id])
+            hi = min(int(indptr[sf_id + 1]), lo + _MAX_CANDIDATES)
+            spans.append((sf_id, lo, hi, off))
+            parts.append(cand_entity[lo:hi].astype(np.int64))
+            off += hi - lo
+        if cfg.disambiguator == "generative":
+            flat = context_loglik(model, np.concatenate(parts), q_tokens,
+                                  q_counts)
+            ctx = [flat[o:o + hi - lo] for (_, lo, hi, o) in spans]
+        elif cfg.disambiguator == "tficf":
+            ctx = tficf_scores(model, parts, q_tokens, q_counts)
+        else:
+            ctx = [0.0] * len(parts)  # prior: ln P(e|s) alone
+        for (sf_id, lo, hi, _), ents, c in zip(spans, parts, ctx):
+            memo[(para_idx, sf_id)] = _rank_scores(
+                ents, model.cand_ln_prior[lo:hi] + c, cfg.k)
 
-    if cfg.disambiguator == "generative":
-        # pass 1: resolve trivial cases, collect multi-candidate work
-        pending: dict[int, list[int]] = {}
-        for (_b, _e, sf_id, para_idx) in spots:
-            key = (para_idx, sf_id)
-            if key in memo:
-                continue
-            lo, hi = model.cand_indptr[sf_id], model.cand_indptr[sf_id + 1]
-            if hi <= lo:
-                memo[key] = []  # NIL (C3)
-            elif hi - lo == 1:
-                memo[key] = [(int(model.cand_entity[lo]), 1, 1.0, 0.0)]
-            else:
-                memo[key] = None
-                pending.setdefault(para_idx, []).append(sf_id)
-        for para_idx, sf_list in pending.items():
-            q_tokens, q_counts = bags[para_idx]
-            sm = (1.0 - model.lam) * np.exp(model.lm_logprob[q_tokens])
-            spans = []
-            parts = []
-            off = 0
-            for sf_id in sf_list:
-                lo = int(model.cand_indptr[sf_id])
-                hi = min(int(model.cand_indptr[sf_id + 1]),
-                         lo + cfg.max_candidates)  # C2 prune
-                spans.append((sf_id, lo, hi, off))
-                parts.append(model.cand_entity[lo:hi].astype(np.int64))
-                off += hi - lo
-            ents_cat = np.concatenate(parts)
-            ctx = context_loglik(model, ents_cat, q_tokens, q_counts, sm)
-            for (sf_id, lo, hi, off), ents in zip(spans, parts):
-                scores = model.cand_ln_prior[lo:hi] + ctx[off:off + hi - lo]
-                memo[(para_idx, sf_id)] = _rank_scores(ents, scores, cfg.k)
-    else:
-        smooths: dict[int, np.ndarray] = {}
-        for (_b, _e, sf_id, para_idx) in spots:
-            key = (para_idx, sf_id)
-            if key in memo:
-                continue
-            sm = smooths.get(para_idx)
-            if sm is None:
-                q_tokens, _ = bags[para_idx]
-                sm = (1.0 - model.lam) * np.exp(model.lm_logprob[q_tokens])
-                smooths[para_idx] = sm
-            memo[key] = _score_mention(model, cfg, sf_id, bags[para_idx], sm)
-
-    for (begin, end, sf_id, para_idx) in spots:
-        for (eid, rank, sim, pct2) in memo[(para_idx, sf_id)]:
-            out.append((begin, end, sf_id, eid, rank, sim, pct2))
-    return out
+    return [(begin, end, sf_id, eid, rank, sim, pct2)
+            for (begin, end, sf_id, para_idx) in spots
+            for (eid, rank, sim, pct2) in memo[(para_idx, sf_id)]]
 
 
 def _rank_scores(ents: np.ndarray, scores: np.ndarray, k: int) -> list:
     """D5 softmax + D6 top-K + D7 second-rank margin over one mention's
-    candidate scores (shared by the batched and per-mention paths).
+    candidate scores → [(eid, rank, sim, pct2)].
 
-    Candidate lists are tiny (top-K-pruned, typically 2-5), so the
-    numpy call chain (argsort + fancy index + exp + sum) is pure
-    per-call overhead — a plain-python sort + math.exp is ~3× faster at
-    these sizes. math.exp and np.exp agree to the last ulp or so, five
-    decades inside the contract's 9-dp score rounding (the same noise
-    budget that already absorbs matmul summation order)."""
+    Lists hold at most ``_MAX_CANDIDATES`` entries, so a plain-python
+    sort + math.exp beats the numpy call chain (argsort + fancy index +
+    exp + sum is pure per-call overhead at these sizes). math.exp and
+    np.exp agree to the last ulp or so, five decades inside the
+    contract's 9-dp score rounding."""
     n = len(scores)
-    if n <= 16:
-        s = scores.tolist()
-        order = sorted(range(n), key=lambda i: (-s[i], i))
-        m = s[order[0]]
-        exp_s = [math.exp(s[i] - m) for i in order]
-        tot = sum(exp_s)
-        ranked = []
-        for r in range(min(k, n)):
-            pct2 = math.exp(s[order[r + 1]] - s[order[r]]) if r + 1 < n \
-                else 0.0
-            ranked.append((int(ents[order[r]]), r + 1, exp_s[r] / tot, pct2))
-        return ranked
-    order = np.argsort(-scores, kind="stable")
-    s_sorted = scores[order]
-    m = s_sorted[0]
-    exp_s = np.exp(s_sorted - m)
-    sim = exp_s / exp_s.sum()
+    s = scores.tolist()
+    order = sorted(range(n), key=lambda i: (-s[i], i))
+    m = s[order[0]]
+    exp_s = [math.exp(s[i] - m) for i in order]
+    tot = sum(exp_s)
     ranked = []
-    for r in range(min(k, len(order))):
-        pct2 = float(np.exp(s_sorted[r + 1] - s_sorted[r])) \
-            if r + 1 < len(order) else 0.0
-        ranked.append((int(ents[order[r]]), r + 1, float(sim[r]), pct2))
+    for r in range(min(k, n)):
+        pct2 = math.exp(s[order[r + 1]] - s[order[r]]) if r + 1 < n else 0.0
+        ranked.append((int(ents[order[r]]), r + 1, exp_s[r] / tot, pct2))
     return ranked
-
-
-def _score_mention(model: SpotlightModel, cfg: PipelineConfig,
-                   sf_id: int, bag, smooth=None) -> list:
-    """Score one (sf, context-bag) instance → [(eid, rank, sim, pct2)]."""
-    q_tokens, q_counts = bag
-    lo, hi = model.cand_indptr[sf_id], model.cand_indptr[sf_id + 1]
-    if hi <= lo:
-        return []  # NIL: sf with no candidates (C3) — dropped
-    if hi - lo == 1:
-        # singleton candidate: softmax over one score is exactly 1.0 and
-        # there is no second rank — context scoring cannot change the
-        # output, so skip it (the bulk of mentions in a Zipf lexicon)
-        return [(int(model.cand_entity[lo]), 1, 1.0, 0.0)]
-    hi = min(hi, lo + cfg.max_candidates)  # C2 top-K by prior (rows are prior-desc)
-    ents = model.cand_entity[lo:hi].astype(np.int64)
-    ln_prior = model.cand_ln_prior[lo:hi]
-    if cfg.disambiguator == "prior":
-        scores = ln_prior
-    elif cfg.disambiguator == "tficf":
-        ctx = tficf_scores(model, [ents], q_tokens, q_counts)[0]
-        scores = ln_prior + ctx
-    else:  # generative (default model, Daiber 2013)
-        ctx = context_loglik(model, ents, q_tokens, q_counts, smooth)
-        scores = ln_prior + ctx
-    return _rank_scores(ents, scores, cfg.k)
 
 
 def _passes_filters(model: SpotlightModel, cfg: PipelineConfig,
@@ -403,17 +363,15 @@ def _coref_merge(model: SpotlightModel, scored: list) -> list:
     return out
 
 
-def _annotate_pdf(model: SpotlightModel, cfg: PipelineConfig,
-                  pdf: pd.DataFrame, apply_filters: bool) -> pd.DataFrame:
+def _annotate_docs(model: SpotlightModel, cfg: PipelineConfig, docs,
+                   apply_filters: bool) -> pd.DataFrame:
+    """(url, text) docs → scored annotations (ANNOTATION_SCHEMA)."""
     # columnar accumulation: one list per output column (a list-of-tuples
     # DataFrame build transposes row-wise — ~2× the allocation traffic,
     # which is what limits multi-worker scaling on a shared memory bus)
     cols: tuple[list, ...] = tuple([] for _ in ANNOTATION_SCHEMA.fields)
     (c_url, c_begin, c_end, c_sf, c_uri, c_rank, c_sim, c_pct2,
      c_support, c_types) = cols
-    htmls = pdf["html"].tolist() if "html" in pdf.columns else None
-    texts = pdf["text"].tolist() if htmls is None else None
-    urls = pdf["url"].tolist()
     # vacuous filter config (the /annotate default) → skip the per-row
     # filter call entirely (it is pure overhead: everything passes)
     if apply_filters and cfg.confidence <= 0.0 and cfg.support <= 0 \
@@ -421,8 +379,7 @@ def _annotate_pdf(model: SpotlightModel, cfg: PipelineConfig,
         apply_filters = False
     sf_names, ent_uris = model.sf_names, model.ent_uris
     ent_support, ent_types = model.ent_support, model.ent_types
-    for i, url in enumerate(urls):
-        text = strip_html(htmls[i]) if htmls is not None else texts[i]
+    for url, text in docs:
         spots, bags = _doc_spots(model, text, cfg.spotter)
         scored = _score_doc(model, cfg, spots, bags)
         if cfg.coreference:
@@ -454,72 +411,66 @@ def _annotate_pdf(model: SpotlightModel, cfg: PipelineConfig,
     })
 
 
-def _lang_filtered(web_pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    # native column filter → Catalyst pushes it into the parquet scan
-    return web_pages.filter(F.col("lang") == cfg.lang) if cfg.lang else web_pages
+def _map_docs(web_pages: DataFrame, model_bc, cfg: PipelineConfig,
+              schema: StructType, emit) -> DataFrame:
+    """The one fused, shuffle-free mapInPandas pass of every endpoint:
+    lang filter (native column filter → Catalyst pushes it into the
+    parquet scan) → (url, html|text) projection (column pruning reaches
+    the scan) → per-worker model → ``emit(model, docs)`` per Arrow batch,
+    where ``docs`` lazily yields (url, text) with html run through
+    ``strip_html`` one document at a time.
 
-
-def annotate(spark: SparkSession, web_pages: DataFrame, model_bc,
-             cfg: PipelineConfig | None = None) -> DataFrame:
-    """/annotate (SURVEY §3.1): fused, shuffle-free mapInPandas DAG.
-
-    ``model_bc`` is a ``spark.sparkContext.broadcast(SpotlightModel)``.
-    Input needs (url, html, lang) or (url, text, lang).
-    """
-    cfg = cfg or PipelineConfig()
-    src = _lang_filtered(web_pages, cfg)
-    has_html = "html" in src.columns
-    cols = ["url", "html"] if has_html else ["url", "text"]
-    src = src.select(*cols)  # column pruning reaches the scan
+    Input needs (url, html, lang) or (url, text, lang); ``model_bc`` is
+    a ``spark.sparkContext.broadcast(SpotlightModel)``."""
+    src = web_pages.filter(F.col("lang") == cfg.lang) if cfg.lang \
+        else web_pages
+    body = "html" if "html" in src.columns else "text"
+    src = src.select("url", body)
 
     def run(batches):
         model = _get_model(model_bc)
         for pdf in batches:
             if len(pdf):
-                yield _annotate_pdf(model, cfg, pdf, apply_filters=True)
+                texts = pdf[body].tolist()
+                if body == "html":
+                    texts = map(strip_html, texts)
+                yield emit(model, zip(pdf["url"].tolist(), texts))
 
-    return src.mapInPandas(run, schema=ANNOTATION_SCHEMA)
+    return src.mapInPandas(run, schema=schema)
+
+
+def annotate(spark: SparkSession, web_pages: DataFrame, model_bc,
+             cfg: PipelineConfig | None = None) -> DataFrame:
+    """/annotate (SURVEY §3.1): spot → score → F1–F3 filters."""
+    cfg = cfg or PipelineConfig()
+    return _map_docs(
+        web_pages, model_bc, cfg, ANNOTATION_SCHEMA,
+        lambda model, docs: _annotate_docs(model, cfg, docs, True))
 
 
 def candidates(spark: SparkSession, web_pages: DataFrame, model_bc,
                cfg: PipelineConfig | None = None) -> DataFrame:
     """/candidates (SURVEY §3.2): bestK ranked, unfiltered."""
     cfg = cfg or PipelineConfig()
-    src = _lang_filtered(web_pages, cfg).select(
-        "url", "html" if "html" in web_pages.columns else "text"
-    )
-
-    def run(batches):
-        model = _get_model(model_bc)
-        for pdf in batches:
-            if len(pdf):
-                yield _annotate_pdf(model, cfg, pdf, apply_filters=False)
-
-    return src.mapInPandas(run, schema=ANNOTATION_SCHEMA)
+    return _map_docs(
+        web_pages, model_bc, cfg, ANNOTATION_SCHEMA,
+        lambda model, docs: _annotate_docs(model, cfg, docs, False))
 
 
 def spot(spark: SparkSession, web_pages: DataFrame, model_bc,
          cfg: PipelineConfig | None = None) -> DataFrame:
     """/spot (SURVEY §2.12): stop after P1–P4."""
     cfg = cfg or PipelineConfig()
-    src = _lang_filtered(web_pages, cfg)
-    has_html = "html" in src.columns
-    src = src.select("url", "html" if has_html else "text")
 
-    def run(batches):
-        model = _get_model(model_bc)
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                url = pdf["url"].iat[i]
-                text = strip_html(pdf["html"].iat[i]) if has_html else pdf["text"].iat[i]
-                spots, _ = _doc_spots(model, text, cfg.spotter)
-                for (b, e, sf_id, _p) in spots:
-                    rows.append((url, b, e, model.sf_names[sf_id], int(sf_id),
-                                 float(model.sf_ann_prob[sf_id])))
-            yield pd.DataFrame(rows, columns=[f.name for f in SPOT_SCHEMA.fields])
+    def emit(model, docs):
+        return pd.DataFrame(
+            [(url, b, e, model.sf_names[sf_id], int(sf_id),
+              float(model.sf_ann_prob[sf_id]))
+             for url, text in docs
+             for (b, e, sf_id, _p) in _doc_spots(model, text, cfg.spotter)[0]],
+            columns=[f.name for f in SPOT_SCHEMA.fields])
 
-    return src.mapInPandas(run, schema=SPOT_SCHEMA)
+    return _map_docs(web_pages, model_bc, cfg, SPOT_SCHEMA, emit)
 
 
 NIL_SPOT_SCHEMA = StructType([
@@ -544,35 +495,25 @@ def nil_spots(spark: SparkSession, web_pages: DataFrame, model_bc,
     ±``context_chars`` window of extracted text around the spot, the
     exact input shape of :func:`operators.nilcluster.nil_clusters`.
 
-    Plan shape matches ``spot``/``annotate``: lang filter + 2-column
-    projection pushed to the scan, ONE fused mapInPandas, 0 Exchange —
-    the NIL extraction rides the same single pass over the corpus and
-    at 10^12 docs adds no shuffle of its own."""
+    Plan shape matches ``spot``/``annotate`` (the shared ``_map_docs``
+    pass): lang filter + 2-column projection pushed to the scan, ONE
+    fused mapInPandas, 0 Exchange — the NIL extraction rides the same
+    single pass over the corpus and at 10^12 docs adds no shuffle of
+    its own."""
     cfg = cfg or PipelineConfig()
-    src = _lang_filtered(web_pages, cfg)
-    has_html = "html" in src.columns
-    src = src.select("url", "html" if has_html else "text")
 
-    def run(batches):
-        model = _get_model(model_bc)
+    def emit(model, docs):
         indptr = model.cand_indptr
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                url = pdf["url"].iat[i]
-                text = strip_html(pdf["html"].iat[i]) if has_html \
-                    else pdf["text"].iat[i]
-                spots, _ = _doc_spots(model, text, cfg.spotter)
-                for (b, e, sf_id, _p) in spots:
-                    if indptr[sf_id + 1] > indptr[sf_id]:
-                        continue  # linkable: annotate()'s business
-                    rows.append((url, b, e, model.sf_names[sf_id],
-                                 text[max(0, b - context_chars):
-                                      e + context_chars]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in NIL_SPOT_SCHEMA.fields])
+        return pd.DataFrame(
+            [(url, b, e, model.sf_names[sf_id],
+              text[max(0, b - context_chars):e + context_chars])
+             for url, text in docs
+             for (b, e, sf_id, _p) in _doc_spots(model, text, cfg.spotter)[0]
+             # linkable spots are annotate()'s business
+             if indptr[sf_id + 1] <= indptr[sf_id]],
+            columns=[f.name for f in NIL_SPOT_SCHEMA.fields])
 
-    return src.mapInPandas(run, schema=NIL_SPOT_SCHEMA)
+    return _map_docs(web_pages, model_bc, cfg, NIL_SPOT_SCHEMA, emit)
 
 
 def extract_text(web_pages: DataFrame) -> DataFrame:

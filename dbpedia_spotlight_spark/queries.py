@@ -9054,185 +9054,13 @@ def sql_jsonld_extract() -> str:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 entries — the driver checks at most the first 50 registry
-    keys in order, so queries without a prior green CORRECTNESS row lead.
-    Operators whose dedicated query rotated out stay externally exercised
-    through a containing query: spot_multitoken ⊂ spot_fsa,
-    quantized_uri_counts ⊂ annotate_quantized, simhash ⊂
-    simhash_near_pairs, jaccard_lsh_verified ⊂ jaccard_pairs+minhash_pairs,
-    ann_ivf_fixed ⊂ ann_ivf (now fully oracle-paired), fingerprint ⊂
-    winnowing, token_count ⊂ quality_gopher (n_tokens), tpch_q1/q3 and
-    order_running_totals ⊂ tpch_q5 + sessionize/salted_user_topk window
-    plumbing (the rotated q_/sql_ functions remain in this module and in
-    pytest). Round-4 rotation: pii_counts + hash_split in (previously
-    pytest-only); annotate_quantized + annotate_coref out (3 rounds
-    green; M6 stays covered by functions/quantize tests + the rotated
-    pair, F5 by the rotated pair — both still DuckDB-mirrored in
-    tests/test_rotated_queries.py). Round-4 second rotation: the
-    web-scale KG ops warc_source + triple_delta + latest_capture +
-    canonical_urls in (previously rotated-pytest only — the on-brief
-    Common-Crawl ingestion and KG-maintenance surface now carries hard
-    driver signal); candidates_generative (C1 ⊂ candidates_topk +
-    annotate_generative), model_token_counts (M4 ⊂ model_build),
-    vocab_counts (⊂ quality_gopher gram stats) and tpch_q5 (generic
-    relational plumbing; part_type_stats keeps the join/agg slice) out
-    — all four stay DuckDB-mirrored in tests/test_rotated_queries.py.
-    Round-4 third rotation: infer_domain_range (rdfs:2/3 property-schema
-    entailment) + bgp_agg_type_counts (SPARQL 1.1 aggregation) in — the
-    session's new operator families now carry hard driver signal;
-    uri_counts + pair_counts out (M1/M2, green since round 1, both
-    recomputed inside the model_build ★ oracle and still DuckDB-mirrored
-    in tests/test_rotated_queries.py).
-    Round-4 fourth rotation (session 8): decontam_overlap (benchmark
-    eval-leak n-gram overlap) + ngram_perplexity (relational bigram-LM
-    CCNet quality signal) in — both new operator families on real
-    driver tables; frame_sample (trivial deterministic grid, now
-    superseded by the REAL y4m frame_features + its pytest battery) and
-    events_hourly (green since round 1; streaming twin keeps the
-    semantics pinned) out — both stay DuckDB-mirrored in
-    tests/test_rotated_queries.py.
-    Round-4 fifth rotation (session 10): owl_entail (OWL-RL property
-    axioms + rdfs:5/7) + graph_provenance (named-graph quad querying)
-    in — the reasoning/provenance completion now carries hard driver
-    signal; sf_totals + redirect_closure out (M3/K1, green since round
-    1, both recomputed inside the model_build ★ oracle) — both stay
-    DuckDB-mirrored in tests/test_rotated_queries.py. Session-10 swap:
-    jaccard_lsh_verified (the PRODUCTION LSH→exact-verify composition,
-    bounded at any scale) replaces jaccard_pairs (the uncapped
-    all-pairs oracle form — the one registry plan shape that could not
-    run at 100×; it stays exact and DuckDB-mirrored in the rotated
-    suite as the oracle harness it is).
-    Round-5 sixth rotation: sparql_text (the SPARQL 1.1 text front-end —
-    parser → planner dispatch, the round-4 session's biggest user-facing
-    surface) + shape_report (SHACL-core-lite validation, all 8
-    constraint components) in — both previously rotated-pytest only,
-    re-verified against their DuckDB oracles at sf0.01 before the swap;
-    annotate_stemmed + annotate_tficf out (T2/D3, green since round 1;
-    stemming stays pinned by tests/test_stemmer.py + the rotated pair,
-    TF-ICF by the rotated pair — both still DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 seventh rotation: dup_span_stats (exact duplicate-span
-    dedup, Lee et al. 2022 ExactSubstr at word-13-gram granularity —
-    the new operators/spandedup.py family) in, verified against its
-    DuckDB oracle at sf0.001 AND sf0.01 before the swap; corpus_filter
-    out (a pure composition of lang_id + quality, BOTH of which remain
-    registered — the composition stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 eighth rotation: quality_logreg (model-based quality gate —
-    distributed logistic regression, operators/classifier.py, the
-    CCNet/DCLM classifier-filter pattern; 20-step GD replayed as
-    unrolled MATERIALIZED CTEs in DuckDB, bit-identical at both SFs
-    before the swap) in; quality out (green since round 1; its six
-    features are recomputed VERBATIM inside the quality_logreg oracle
-    via sql_quality, and the pair stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 ninth rotation: dsir_select (DSIR importance-resampling
-    data selection toward a target reference, Xie et al. 2023 —
-    operators/dsir.py, hashed-n-gram bucket models + deterministic
-    Gumbel top-k; full relational DuckDB oracle, bit-identical at
-    sf0.001 AND sf0.01 before the swap) in; ann_lsh out (green since
-    round 2; its hyperplane-LSH machinery stays exercised inside the
-    registered near_dup_embeddings, and the pair stays DuckDB-mirrored
-    in tests/test_rotated_queries.py).
-    Round-5 tenth rotation: mention_relations (open relation extraction
-    between adjacent disambiguated mentions — operators/relations.py,
-    the ReVerb-shaped triple-extraction completion of the KG story;
-    oracle replays the full annotate chain + adjacency + span
-    normalization, bit-identical at sf0.001 AND sf0.01 before the swap)
-    in; tsv_lexicon out (S5 importer, green since round 1 — the TSV
-    parse + priors math stay DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 eleventh rotation: canonical_relations (owl:sameAs
-    canonicalization of the relation table — alias merge via the
-    canonical map, collapsed self-pairs dropped, exact n_docs through
-    the per-doc state; oracle replays the whole chain relationally,
-    green at sf0.001 AND sf0.01 before the swap) in;
-    spotxml_disambiguate out (S2 source, 2 rows, green since round 1 —
-    the spot-XML parse + disambiguation stay DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 twelfth rotation: link_prediction (KG completion — common-
-    neighbors / Jaccard / Adamic-Adar over the co-mention graph,
-    operators/graph.py::link_prediction, wedge-center enumeration with
-    the hub cap; oracle replays the wedge joins + anti-join
-    relationally, green at sf0.001 AND sf0.01 before the swap) in;
-    wiki_links out (S3 source, green since round 1 — the wiki-markup
-    parse stays DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 thirteenth rotation: fused_truth (truth discovery /
-    knowledge fusion — operators/fusion.py, the normalized-voting
-    trust⇄belief fixpoint over conflicting multi-source claims; 5
-    rounds replayed as unrolled MATERIALIZED CTEs in DuckDB, green at
-    sf0.001 AND sf0.01 before the swap; companion fusion_trust pair in
-    the rotated suite) in; annotate_prior out (D8 prior-only baseline,
-    green since round 1 — prior scoring stays exercised inside
-    annotate_generative + candidates_topk and the pair stays
-    DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 fourteenth rotation: nil_clusters (NIL clustering — the
-    emergent-entity half of C3 NIL handling: blocking on the casefolded
-    surface key, sorted-neighborhood pairs, hashed-context cosine
-    verify, min-label components — operators/nilcluster.py; oracle
-    replays every stage incl. the propagation rounds as unrolled
-    MATERIALIZED CTEs, bit-identical at sf0.001 AND sf0.01 before the
-    swap) in; spot_unigram out (T1/T5, green since round 1 — tokenizer
-    + case normalization stay exercised inside spot_fsa and every
-    pipeline query, and the pair stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 seventeenth rotation: node2vec (p/q-biased second-order
-    walks — integer bias weights + md5-mod-cumsum selection,
-    operators/walks.py::node2vec_walks; oracle replays the weighted
-    pick via window cumsum + EXISTS probe, green at sf0.001 AND
-    sf0.01 before the swap) in; minhash_pairs out (green since round
-    2 — the MinHash+LSH banding machinery stays exercised inside the
-    registered jaccard_lsh_verified composition, and the pair stays
-    DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 eighteenth rotation: fact_allen (Allen interval algebra
-    over fact-validity episodes — triples.py::allen_relations, all 7
-    canonical relations planted incl. the live-episode +∞ lane;
-    oracle replays the pair expansion as a row-comparison self-join
-    + CASE ladder, green at sf0.001 AND sf0.01 before the swap) in;
-    sessionize out (green since round 3 — per-user window semantics
-    stay pinned by its pytests, the applyInPandasWithState streaming
-    twin, and the registered salted_user_topk window plumbing; the
-    pair stays DuckDB-mirrored in tests/test_rotated_queries.py)
-    Round-5 nineteenth + twentieth rotations: hyperball (HyperBall
-    neighborhood function — per-(node, radius) HLL ball sizes via
-    register max-merge, operators/graph.py::ball_sizes; oracle = exact
-    balls from an all-sources recursive BFS + the same md5-register /
-    integer-exact estimator replay) and betweenness (exact all-sources
-    Brandes over the backbone — dyadic 2^-30-quantized backward terms,
-    generated per-level sigma/delta CTE oracle), both green at
-    sf0.001 AND sf0.01 before the swap, in; lang_id (green r1-r4; the
-    n-gram profile pair stays DuckDB-mirrored in the rotated suite)
-    and ann_topk (green r1-r4; brute-force cosine top-k stays
-    exercised as the exact-verify shape inside the registered
-    near_dup_embeddings and the ann_ivf probe; pair DuckDB-mirrored)
-    out.
-    Round-5 rotations 25-26 (continued session): meta_triples +
-    jsonld_extract in (the structured-data extraction lane — the most
-    on-brief new surface: KG triples from raw Common-Crawl-style HTML;
-    both green vs DuckDB at sf0.001 AND sf0.01 first, and the JSON-LD
-    oracle runs a REAL JSON parser in BOTH engines); spot_npchunk +
-    quality_gopher out (green since round 2 — NP-chunk spotting stays
-    pinned by the pipeline pytests and its rotated pair, the Gopher
-    gates by tests/test_plans_scale.py's single-scan pin, the
-    quality_logreg oracle's verbatim feature recompute, and the
-    rotated pair).
-    Round-5 rotations 21-24 (continued session): k_truss (4-truss
-    peeling over the co-mention graph — edge-level cohesion,
-    operators/graph.py::k_truss; oracle unrolls the peel past the
-    idempotent fixpoint), coreness (full core-number decomposition via
-    the H-operator iteration, histogram-shaped rounds; unrolled
-    H-index CTE oracle), kn_perplexity (interpolated Kneser-Ney — the
-    KenLM smoothing — relational train+score), and kmv_users (bottom-k
-    KMV distinct sketch: exact below capacity at sf0.001, Beyer
-    estimator branch at sf0.01), all green at sf0.001 AND sf0.01
-    before the swap, in; latest_capture + canonical_urls (green since
-    their round-4 rotation; recrawl dedup + URL canonicalization stay
-    DuckDB-mirrored in the rotated suite), image_features (green since
-    round 2; the codec battery in tests/test_codecs_multimodal.py and
-    the rotated audio/frame pairs keep the decode seam pinned) and
-    salted_user_topk (green since round 2; the two-phase salted-agg
-    device stays pinned by its pytest equivalence and the pair stays
-    DuckDB-mirrored) out."""
+    """The query registry ``__spark_entry__.queries()`` exposes: EXACTLY
+    50 entries, and only the first 50 keys are read, in order. Queries
+    rotated out of the window stay in this module as (``q_*``,
+    ``sql_*``) pairs and remain DuckDB-mirrored in
+    ``tests/test_rotated_queries.py``; operators without a registry
+    entry of their own run inside a registered query that contains
+    them."""
     return {
         # --- queries with no prior external CORRECTNESS row run FIRST ---
         "meta_triples": q_meta_triples,

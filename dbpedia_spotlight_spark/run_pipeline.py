@@ -174,7 +174,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
             raise SystemExit("--base-triples requires triple emission")
         from dbpedia_spotlight_spark.triples import triple_delta
         base = spark.read.parquet(args.base_triples)
-        cat.write(triple_delta(base, written), f"{name}_delta")
+        # every corpus url is recrawled, also one that now yields no
+        # triples (turned non-English, lost its mentions)
+        cat.write(triple_delta(base, written, corpus), f"{name}_delta")
         by_change = {
             r["change"]: r["n"]
             for r in cat.read(spark, f"{name}_delta").groupBy("change")

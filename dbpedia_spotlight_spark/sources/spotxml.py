@@ -97,10 +97,9 @@ def disambiguate_xml(spark: SparkSession, df: DataFrame, model_bc,
     """
     from dbpedia_spotlight_spark.functions.tokenizer import tokenize
     from dbpedia_spotlight_spark.pipeline import (
-        ANNOTATION_SCHEMA, PipelineConfig, _get_model, _passes_filters,
-        _score_doc, _token_lookup,
+        ANNOTATION_SCHEMA, PipelineConfig, _get_model, _para_bags,
+        _para_of, _passes_filters, _score_doc,
     )
-    import bisect
 
     cfg = cfg or PipelineConfig()
 
@@ -117,30 +116,14 @@ def disambiguate_xml(spark: SparkSession, df: DataFrame, model_bc,
                 if not named_spots:
                     continue
                 # context bags per paragraph, same as the annotate path
-                toks = tokenize(text)
-                lookup = _token_lookup(model)
-                ids = [lookup(t, -1) for (_, _, t) in toks]
-                bounds = [i for i, ch in enumerate(text) if ch == "\n"]
-
-                def para_of(b: int) -> int:
-                    return bisect.bisect_right(bounds, b)
-
-                n_paras = len(bounds) + 1
-                counts = [dict() for _ in range(n_paras)]
-                for (b, _, t), tid in zip(toks, ids):
-                    if tid >= 0 and t not in model.stopwords:
-                        c = counts[para_of(b)]
-                        c[tid] = c.get(tid, 0) + 1
-                from dbpedia_spotlight_spark.pipeline import _bag
-                bags = [_bag(c) for c in counts]
-
+                _, bounds, bags = _para_bags(model, text, tokenize(text))
                 spots = []
                 for name, off in named_spots:
                     sf_id = sf_index.get(name.lower())
                     if sf_id is None:
                         continue  # unknown surface form → NIL (C3)
-                    spots.append((off, off + len(name), sf_id, para_of(off)))
-
+                    spots.append((off, off + len(name), sf_id,
+                                  _para_of(bounds, off)))
                 for (begin, end, sf_id, eid, rank, sim, pct2) in _score_doc(
                     model, cfg, spots, bags
                 ):

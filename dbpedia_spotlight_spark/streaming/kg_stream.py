@@ -867,7 +867,9 @@ def apply_pages_batch(spark: SparkSession, pages: DataFrame, model_bc,
                                           .alias("warc_ts")))
     new_triples = _batch_triples(annotate(spark, pages, model_bc, cfg))
     old = store.read()
-    delta = triple_delta(old, new_triples).localCheckpoint(eager=True)
+    # every url that passed the gate is recrawled — also one whose new
+    # capture yields no triples (e.g. it turned non-English)
+    delta = triple_delta(old, new_triples, pages).localCheckpoint(eager=True)
     n_changes = delta.count()
     if metrics is not None:
         # delta is checkpointed, so the split agg re-reads a tiny

@@ -109,14 +109,19 @@ def as_quads(triples: DataFrame, graph: str | F.Column | None = None
     return triples.select("subj", "pred", "obj", g.alias("graph"))
 
 
-def triple_delta(old: DataFrame, new: DataFrame) -> DataFrame:
+def triple_delta(old: DataFrame, new: DataFrame,
+                 recrawled: DataFrame | None = None) -> DataFrame:
     """Incremental KG maintenance across crawl snapshots (north_rule:
     resumable construction; input_hint recrawl shape).
 
-    A recrawl covers a *subset* of urls. For every url present in
-    ``new``, its triple set REPLACES the old one; urls the recrawl did
-    not touch are untouched (not "removed" — absence of a capture is
-    not absence of the page). Returns the change log
+    A recrawl covers a *subset* of urls: ``recrawled`` (a frame with a
+    ``url`` column; default: the urls of ``new``). For every recrawled
+    url, its triple set REPLACES the old one — a url whose new capture
+    yields no triples (it turned non-English, lost its mentions) loses
+    its old ones, which only an explicit ``recrawled`` can express;
+    urls the recrawl did not touch are untouched (not "removed" —
+    absence of a capture is not absence of the page). Returns the
+    change log
     (url, subj, pred, obj, change∈{added, removed}) such that
     ``apply_delta(old, delta) ≡ old⧸recrawled ∪ new`` (pytest-pinned).
 
@@ -133,7 +138,8 @@ def triple_delta(old: DataFrame, new: DataFrame) -> DataFrame:
     key = ["url", "subj", "pred", "obj"]
     o = provenance_url(old.select("subj", "pred", "obj")).dropDuplicates(key)
     n = provenance_url(new.select("subj", "pred", "obj")).dropDuplicates(key)
-    recrawled = n.select("url").distinct()
+    recrawled = (n if recrawled is None else recrawled).select(
+        "url").distinct()
     removed = (
         o.join(recrawled, "url", "left_semi")
         .join(n, key, "left_anti")

@@ -5,8 +5,8 @@ worker counts (the closest this sandbox gets to a multi-executor
 cluster — separate worker JVMs, real task serialization, a real
 broadcast to each executor).
 
-Orchestrator mode (no args): zips the package, runs the job at 1 and 4
-workers, prints one JSON line with both times + efficiency.
+Orchestrator mode (no args): zips the package, runs the job at 1, 4, 4
+and 1 workers, prints one JSON line with the four legs + efficiency.
 
 Job mode (``--workers N`` inside spark-submit): times annotate over the
 replicated scale corpus and prints ``CLUSTER_BENCH {json}``.
@@ -63,11 +63,10 @@ def orchestrate() -> None:
                 if f.endswith(".py"):
                     p = os.path.join(root, f)
                     z.write(p, os.path.relpath(p, REPO))
-    results = {}
-    # alternate the levels ([1,4,4,1]) and keep the min per level: host
+    legs = []
+    # alternate the levels ([1,4,4,1]) and take the min per level: host
     # contention drifts on minute scales, and the efficiency ratio is
-    # only meaningful when both legs saw comparable background load —
-    # the same min-of-interleaved policy bench.py --scaling uses
+    # only meaningful when both legs saw comparable background load
     for workers in (1, 4, 4, 1):
         cmd = [
             "spark-submit",
@@ -86,59 +85,14 @@ def orchestrate() -> None:
         if not line:
             sys.stderr.write(out.stderr[-2000:])
             raise SystemExit(f"no CLUSTER_BENCH line at workers={workers}")
-        r = json.loads(line[-1][len("CLUSTER_BENCH "):])
-        if workers not in results or r["sec"] < results[workers]["sec"]:
-            results[workers] = r
-    t1, t4 = results[1]["sec"], results[4]["sec"]
-    summary = {
+        legs.append(json.loads(line[-1][len("CLUSTER_BENCH "):]))
+    t1 = min(r["sec"] for r in legs if r["workers"] == 1)
+    t4 = min(r["sec"] for r in legs if r["workers"] == 4)
+    print(json.dumps({
         "metric": "cluster_scaling_1_to_4_workers",
-        "local_cluster_1x4": results[1],
-        "local_cluster_4x4": results[4],
+        "legs": legs,
         "efficiency": round((t1 / t4) / 4.0, 3),
-        "measured_at": time.time(),
-    }
-    # persist for bench.py to forward into the driver's BENCH JSON (the
-    # real-executor form is the north_rule's literal N→4N shape).
-    # External host contention on this VM swings the 4-worker time by
-    # >2x between runs while 1-worker times stay stable (BASELINE.md
-    # documents the same for thread scaling), so the cache accumulates
-    # every sample and reports the BEST one — the standard min-of-N
-    # noise policy, with all samples kept for the judge.
-    cache_p = os.path.join(REPO, ".cluster_cache.json")
-    samples = []
-    if os.path.exists(cache_p):
-        try:
-            with open(cache_p) as f:
-                prev = json.load(f)
-            # full sample dicts only (older cache formats lack them)
-            samples = [s for s in prev.get("samples", [])
-                       if "local_cluster_4x4" in s]
-            if not samples and "local_cluster_4x4" in prev:
-                samples = [{k: prev[k] for k in summary if k in prev}]
-        except (ValueError, OSError):
-            samples = []
-    samples.append(dict(summary))
-    best = max(samples, key=lambda s: s["efficiency"])
-    # two estimators, both shipped: the best single run (legs paired
-    # within one run), and min-per-level across ALL runs — the
-    # conservative form that only credits speed actually observed at
-    # each level, immune to a slow 1-worker leg inflating the ratio
-    t1_min = min(s["local_cluster_1x4"]["sec"] for s in samples)
-    t4_min = min(s["local_cluster_4x4"]["sec"] for s in samples)
-    out = {
-        **best,
-        "policy": "best of n_samples interleaved runs (external host "
-                  "contention; every sample listed)",
-        "n_samples": len(samples),
-        "min_per_level": {
-            "sec_1x4": t1_min, "sec_4x4": t4_min,
-            "efficiency": round((t1_min / t4_min) / 4.0, 3),
-        },
-        "samples": samples,
-    }
-    print(json.dumps(out))
-    with open(cache_p, "w") as f:
-        json.dump(out, f)
+    }))
 
 
 if __name__ == "__main__":

@@ -62,6 +62,46 @@ def test_tficf_icf_definition(model):
     assert scores[0] > scores[1] and scores[0] > scores[2]
 
 
+def test_tficf_scores_match_naive(model):
+    """Batched TF-ICF == direct Mendes-2011 formula (SURVEY §2.5 D3),
+    with ICF over each group's own candidate set, several groups per
+    call: score(e) = Σ_t n(t,q)·tf(t,e)·log(|cands| / df(t))."""
+    rng = np.random.default_rng(1)
+    groups = [rng.choice(model.n_entities(), size=n, replace=False)
+              for n in (2, 3, 5, 1, 4)]
+    # query tokens drawn from the candidates' own contexts, so tf > 0
+    # and 0 < df < |cands| both occur
+    own = np.unique(np.concatenate([
+        model.ctx_token[model.ctx_indptr[e]:model.ctx_indptr[e + 1]]
+        for g in groups for e in g]))
+    q_tokens = np.array(sorted(rng.choice(own, size=10, replace=False)),
+                        dtype=np.int64)
+    q_counts = rng.integers(1, 4, size=10).astype(float)
+
+    got = tficf_scores(model, groups, q_tokens, q_counts)
+    assert len(got) == len(groups)
+    nonzero = 0
+    for ents, scores in zip(groups, got):
+        tf = []
+        for eid in ents:
+            lo, hi = model.ctx_indptr[eid], model.ctx_indptr[eid + 1]
+            row = dict(zip(model.ctx_token[lo:hi].tolist(),
+                           model.ctx_count[lo:hi].tolist()))
+            total = max(model.ctx_total[eid], 1e-300)
+            tf.append({int(t): row.get(int(t), 0.0) / total
+                       for t in q_tokens})
+        assert scores.shape == (len(ents),)
+        for i in range(len(ents)):
+            expect = 0.0
+            for t, n in zip(q_tokens.tolist(), q_counts.tolist()):
+                df = sum(1 for d in tf if d[t] > 0)
+                icf = math.log(len(ents) / df) if df else 0.0
+                expect += n * tf[i][t] * icf
+            assert abs(scores[i] - expect) < 1e-9
+            nonzero += expect != 0.0
+    assert nonzero > 0
+
+
 def test_lnsum():
     xs = np.array([-1000.0, -1000.0])
     assert abs(lnsum(xs) - (-1000.0 + math.log(2))) < 1e-12

@@ -37,16 +37,28 @@ from pathlib import Path
 
 import pytest
 
-# `import bench` (repo root) resolves under `python -m pytest` via cwd;
-# script-mode regen runs with sys.path[0]=tests/, so pin the root too
+# script-mode regen runs with sys.path[0]=tests/: pin the repo root so
+# the package imports without installation
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 EXPECT_PATH = Path(__file__).parent / "plan_expectations.json"
 SF_DIR = os.environ.get("PLAN_GATE_SF_DIR", "/root/testdata/sf0.001")
 
+# the gated queries: the flagship fused annotate path (shuffle-free) plus
+# the KG, dedup, retrieval, LM and graph plans whose shape must not drift
+HEADLINE = [
+    "annotate_generative", "spot_fsa", "annotate_prior", "link_triples",
+    "minhash_pairs", "simhash_near_pairs", "jaccard_pairs", "ann_topk",
+    "ann_ivf", "near_dup_embeddings", "annotate_stemmed", "lang_id",
+    "quality", "tpch_q5", "events_hourly", "bgp_typed_mentions",
+    "decontam_overlap", "ngram_perplexity", "entity_provenance",
+    "dup_span_stats", "dsir_select", "mention_relations",
+    "link_prediction", "entity_walks", "type_prediction", "kg_transe",
+    "node2vec", "hyperball", "betweenness", "k_truss", "coreness",
+]
+
 
 def _headline_queries():
-    import bench
     from dbpedia_spotlight_spark import queries as Q
 
     qs = dict(Q.queries())
@@ -62,7 +74,7 @@ def _headline_queries():
     qs.setdefault("minhash_pairs", Q.q_minhash_pairs)
     qs.setdefault("lang_id", Q.q_lang_id)
     qs.setdefault("ann_topk", Q.q_ann_topk)
-    return [(name, qs[name]) for name in bench.HEADLINE]
+    return [(name, qs[name]) for name in HEADLINE]
 
 
 def _exchange_counts(plan: str) -> dict[str, int]:
@@ -78,17 +90,38 @@ def _exchange_counts(plan: str) -> dict[str, int]:
             "broadcast_exchanges": txt.count("BroadcastExchange")}
 
 
+def _shuffle_totals(spark) -> tuple[int, int]:
+    """(shuffle-write, disk-spill) bytes summed over every stage in the
+    app status store (public API, no listener of our own)."""
+    jvm = spark._jvm
+    sc = spark._jsc.sc()
+    # the status store is fed asynchronously from the listener bus —
+    # drain it first so a just-finished action's task-end events are
+    # included in THIS reading
+    sc.listenerBus().waitUntilEmpty(10_000)
+    stages = sc.statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        spark.sparkContext._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList())
+    write = spill = 0
+    it = stages.iterator()
+    while it.hasNext():
+        st = it.next()
+        write += st.shuffleWriteBytes()
+        spill += st.diskBytesSpilled()
+    return write, spill
+
+
 def _measure(spark, fn) -> dict:
     """Plan-shape counts + measured shuffle/spill bytes for one query."""
-    import bench
-
     df = fn(spark, SF_DIR)
     counts = _exchange_counts(
         df._jdf.queryExecution().executedPlan().toString())
-    shuffle_totals, _reset, _peak = bench._metrics_probe(spark)
-    r0, w0, s0 = shuffle_totals()
-    bench._run(df)
-    r1, w1, s1 = shuffle_totals()
+    w0, s0 = _shuffle_totals(spark)
+    # the noop sink produces every output column (count() would let
+    # Catalyst prune unreferenced expressions)
+    df.write.format("noop").mode("overwrite").save()
+    w1, s1 = _shuffle_totals(spark)
     mb = 1.0 / (1 << 20)
     counts["shuffle_write_mb"] = round((w1 - w0) * mb, 3)
     counts["disk_spill_mb"] = round((s1 - s0) * mb, 3)

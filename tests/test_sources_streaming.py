@@ -31,14 +31,16 @@ def test_parse_spot_xml_roundtrip():
     assert parse_spot_xml("<not-xml") == ("", [])
 
 
-def test_disambiguate_xml_matches_annotate(spark, web_pages, model_bc):
+@pytest.mark.parametrize("disambiguator", ["prior", "generative", "tficf"])
+def test_disambiguate_xml_matches_annotate(spark, web_pages, model_bc,
+                                           disambiguator):
     """/disambiguate on the spots the FSA found must equal /annotate
-    (same scoring path, spots supplied externally)."""
+    (same scoring path, spots supplied externally), scores included."""
     from dbpedia_spotlight_spark.pipeline import spot
     from dbpedia_spotlight_spark.sources.spotxml import (
         disambiguate_xml, to_spot_xml,
     )
-    cfg = PipelineConfig(disambiguator="generative")
+    cfg = PipelineConfig(disambiguator=disambiguator)
     ann = annotate(spark, web_pages, model_bc, cfg)
 
     spots = spot(spark, web_pages, model_bc, cfg).collect()
@@ -55,9 +57,13 @@ def test_disambiguate_xml_matches_annotate(spark, web_pages, model_bc):
     xml_df = spark.createDataFrame(xml_rows, "url string, xml string")
     dis = disambiguate_xml(spark, xml_df, model_bc, cfg)
 
-    a = {(r.url, r.begin, r.end, r.uri) for r in ann.collect()}
-    d = {(r.url, r.begin, r.end, r.uri) for r in dis.collect()}
-    assert d == a
+    def rows(df):
+        return {(r.url, r.begin, r.end, r.uri, round(r.similarity_score, 9),
+                 round(r.percentage_of_second_rank, 9))
+                for r in df.collect()}
+
+    a = rows(ann)
+    assert a and rows(dis) == a
 
 
 # ---------------------------------------------------------------------------
@@ -697,6 +703,37 @@ def test_kg_watermark_carry_forward_and_backfill_gate(spark, web_pages,
     assert n2 > 0 and store.latest_gen() == 1
     w1 = {r.url: r.warc_ts for r in store.read_url_watermarks().collect()}
     assert w1 == w0  # preserved verbatim
+
+
+def test_kg_recapture_without_annotations_drops_old_triples(
+        spark, web_pages, model_bc, tmp_path):
+    """Per-url replace covers a newer capture that yields NO
+    annotations: a page recaptured as German (filtered out by the
+    annotate lang gate) must lose its old triples, every other url keeps
+    its own, and the incrementally maintained digest still matches."""
+    import datetime
+
+    from dbpedia_spotlight_spark.streaming.kg_stream import (
+        KGStore, apply_pages_batch,
+    )
+    from dbpedia_spotlight_spark.triples import provenance_url
+
+    def by_url(store):
+        return {(r.url, r.subj, r.pred, r.obj)
+                for r in provenance_url(store.read()).collect()}
+
+    store = KGStore(spark, str(tmp_path / "kg"))
+    apply_pages_batch(spark, web_pages, model_bc, store, batch_id=0)
+    before = by_url(store)
+    url = min(u for (u, _, _, _) in before)
+    r = web_pages.filter(F.col("url") == url).first()
+    de = spark.createDataFrame(
+        [(r["url"], r["warc_ts"] + datetime.timedelta(days=1), r["html"],
+          r["text"], "de")], schema=web_pages.schema)
+
+    assert apply_pages_batch(spark, de, model_bc, store, 1) > 0
+    assert by_url(store) == {t for t in before if t[0] != url}
+    assert store.verify_snapshot()["ok"]
 
 
 def test_kg_store_time_travel_and_retention(spark, tmp_path):
